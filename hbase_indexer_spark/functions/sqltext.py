@@ -29,8 +29,10 @@ _U32 = 4294967296
 
 
 def qlit(s: str) -> str:
-    """Single-quoted SQL string literal ('' escaping)."""
-    return "'" + s.replace("'", "''") + "'"
+    """Single-quoted Spark SQL string literal.  Backslashes are escapes
+    in Spark's parser (``spark.sql.parser.escapedStringLiterals`` off, its
+    default), so they are doubled first; quotes are then doubled."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def _unsigned_be_sql(e: str) -> str:

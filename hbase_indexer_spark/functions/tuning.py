@@ -36,6 +36,7 @@ _GUARD = threading.Lock()
 _ACTIVE_ATTR = "_hbis_tuning_active"
 
 
+@contextlib.contextmanager
 def small_batch_tuning(spark, batch_rows: int):
     """Context manager: inside the block, shuffles are sized to
     ``batch_rows`` (``rows // 50k`` clamped to ``[4, session setting]``)
@@ -43,36 +44,35 @@ def small_batch_tuning(spark, batch_rows: int):
     already warrants the session width, when the session's width is not
     a plain integer (e.g. ``auto`` on platforms with adaptive defaults),
     or when another tuning block is already active on this context (see
-    the ownership contract above)."""
+    the ownership contract above).  The session width is read, and the
+    no-op decision made, when the block is entered."""
     conf = spark.conf
     try:
         sess_parts = int(conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
-        return contextlib.nullcontext()
+        yield
+        return
     parts = max(MIN_PARTITIONS,
                 min(sess_parts, batch_rows // ROWS_PER_PARTITION))
     if parts >= sess_parts:
-        return contextlib.nullcontext()
+        yield
+        return
     sc = spark.sparkContext
-
-    @contextlib.contextmanager
-    def tuned():
+    owner = False
+    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
+    try:
         with _GUARD:
-            nested = bool(sc.__dict__.get(_ACTIVE_ATTR))
-            if not nested:
-                sc.__dict__[_ACTIVE_ATTR] = True
-        if nested:
             # an outer block owns the width: don't stack conf writes
-            yield
-            return
-        prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            conf.set("spark.sql.shuffle.partitions", str(sess_parts))
-            sc.__dict__[_ACTIVE_ATTR] = False
-
-    return tuned()
+            if not sc.__dict__.get(_ACTIVE_ATTR):
+                sc.__dict__[_ACTIVE_ATTR] = owner = True
+        if owner:
+            conf.set("spark.sql.adaptive.enabled", "false")
+            conf.set("spark.sql.shuffle.partitions", str(parts))
+        yield
+    finally:
+        if owner:
+            try:
+                conf.set("spark.sql.adaptive.enabled", prev_aqe)
+                conf.set("spark.sql.shuffle.partitions", str(sess_parts))
+            finally:
+                sc.__dict__[_ACTIVE_ATTR] = False

@@ -53,7 +53,7 @@ def shingles_of(t: Column, n: int = 3) -> Column:
     inline ``tokens(text)`` expression: higher-order-function lambdas
     are interpreted and re-evaluate the referenced expression tree per
     element, so an inlined tokenizer re-splits the document once per
-    gram — O(tokens^2) per doc (see exploded_shingles for the Generate
+    gram — O(tokens^2) per doc (see _token_arrays for the Generate
     barrier that materializes it)."""
     grams = F.transform(
         F.sequence(F.lit(1), F.size(t) - (n - 1)),
@@ -62,12 +62,6 @@ def shingles_of(t: Column, n: int = 3) -> Column:
     return F.array_distinct(
         F.when(F.size(t) >= n, grams).otherwise(F.array(F.concat_ws(" ", t)))
     )
-
-
-def shingles(text: Column, n: int = 3) -> Column:
-    """Shingles over a raw text column (compat wrapper — prefer
-    shingles_of over a materialized token array in plans)."""
-    return shingles_of(tokens(text), n)
 
 
 TOKS_SQL = "list_filter(string_split_regex(text,'\\s+'), x -> x <> '')"
@@ -85,7 +79,7 @@ def hash60_sql(expr: str) -> str:
 
 
 def shingles_sql(n: int = 3, toks: str = "toks") -> str:
-    """DuckDB expression over a ``toks`` list column (pair of shingles())."""
+    """DuckDB expression over a ``toks`` list column (pair of shingles_of())."""
     parts = " || ' ' || ".join(f"{toks}[i+{j}]" for j in range(n))
     return (
         f"CASE WHEN len({toks}) >= {n} THEN "
@@ -102,15 +96,46 @@ def shingle_cte_sql(n: int = 3) -> str:
     """
 
 
-def exploded_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    # two Generate stages: the first materializes the token array as a
-    # bound attribute (single-element explode — a CollapseProject barrier,
-    # map-side), so the gram lambda reads an array instead of re-splitting
-    # the text per gram
-    toked = docs.select(
+def _token_arrays(docs: DataFrame) -> DataFrame:
+    # a single-element explode materializes the token array as a bound
+    # attribute (a CollapseProject barrier, map-side), so the gram lambda
+    # reads an array instead of re-splitting the text per gram
+    return docs.select(
         "doc_id", F.explode(F.array(tokens(F.col("text")))).alias("_toks"))
-    return toked.select(
+
+
+def shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
+    """``(doc_id, sh)``: each doc's distinct shingle array — the array
+    ``exploded_shingles`` explodes."""
+    return _token_arrays(docs).select(
+        "doc_id", shingles_of(F.col("_toks"), n).alias("sh"))
+
+
+def exploded_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
+    """``(doc_id, sh)`` with one row per distinct shingle of each doc.
+    The explode takes the shingle expression itself: over an attribute,
+    the optimizer infers a ``size(sh) > 0`` filter and pushes it below the
+    projection, which would shingle every doc twice."""
+    return _token_arrays(docs).select(
         "doc_id", F.explode(shingles_of(F.col("_toks"), n)).alias("sh"))
+
+
+def jaccard_verify(cands: DataFrame, x_sets: DataFrame, y_sets: DataFrame,
+                   threshold: float, x: str = "x", y: str = "y") -> DataFrame:
+    """``(x, y, jaccard)`` for the candidate pairs with exact shingle
+    Jaccard >= threshold, scored on the two ``shingle_sets`` arrays as
+    ``|a ∩ b| / (|a| + |b| - |a ∩ b|)``: the same integers, hence the same
+    doubles, as counting matched rows of the exploded shingle tables."""
+    a = x_sets.select(F.col("doc_id").alias(x), F.col("sh").alias("_a"))
+    b = y_sets.select(F.col("doc_id").alias(y), F.col("sh").alias("_b"))
+    inter = F.size(F.array_intersect("_a", "_b"))
+    return (
+        cands.join(a, x).join(b, y)
+        .select(x, y, (inter.cast("double")
+                       / (F.size("_a") + F.size("_b") - inter).cast("double")
+                       ).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -259,8 +284,7 @@ def _sig_min_exprs() -> list[Column]:
 def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
     """k=48 MinHash signatures per doc: explode shingles once, 48 min-aggs
     over (a*h+b) % p — a single map-side-combinable aggregation."""
-    sh = exploded_shingles(docs, n).withColumn("h", token_hash60(F.col("sh")) % P)
-    return sh.groupBy("doc_id").agg(*_sig_min_exprs())
+    return sigs_from_shingles(exploded_shingles(docs, n))
 
 
 def minhash_signatures_sql(n: int = 3, k: int = N_SIGS) -> str:
@@ -358,36 +382,16 @@ def minhash_lsh_dedup_pairs(docs: DataFrame, threshold: float = 0.7,
     J>=0.9 is 1 - (1-0.9^3)^16 ~ 1 - 8e-10; the driver data's true dups are
     all J>=0.9 (verified), so output == exact-Jaccard output.
 
+    Candidates are verified on the docs' shingle arrays
+    (``jaccard_verify``); nothing is cached or left persisted.
+
     ``max_bucket_size``: hot-bucket star-candidate guard, see
     lsh_candidate_pairs — set it on template-heavy corpora where a single
     band bucket can hold thousands of members."""
-    # one shingle explosion feeds signatures, sizes and the verify join —
-    # cache it (its recompute is the whole tokenize+shingle pass)
-    sh = exploded_shingles(docs, n).cache()
-    sigs = sigs_from_shingles(sh)
+    sigs = sigs_from_shingles(exploded_shingles(docs, n))
     cands = lsh_candidate_pairs(sigs, max_bucket_size=max_bucket_size)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sh.alias("sa")
-    sb = sh.alias("sb")
-    inter = (
-        cands.join(sa, F.col("x") == F.col("sa.doc_id"))
-        .join(sb, (F.col("y") == F.col("sb.doc_id")) & (F.col("sa.sh") == F.col("sb.sh")))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sx = sizes.alias("sx")
-    sy = sizes.alias("sy")
-    return (
-        inter.join(sx, F.col("x") == F.col("sx.doc_id"))
-        .join(sy, F.col("y") == F.col("sy.doc_id"))
-        .select(
-            "x", "y",
-            (F.col("n_inter").cast("double")
-             / (F.col("sx.n_sh") + F.col("sy.n_sh") - F.col("n_inter")).cast("double")
-             ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    sets = shingle_sets(docs, n)
+    return jaccard_verify(cands, sets, sets, threshold)
 
 
 def edit_distance_dedup(docs: DataFrame, max_dist: int = 20,
@@ -1228,21 +1232,23 @@ def deduped_corpus(docs: DataFrame, threshold: float = 0.7, n: int = 3) -> DataF
     dropped.  The rule is deterministic (no clustering iteration), which is
     what a production pipeline wants for reproducible corpus snapshots.
 
-    Scale: exact keep-set is one hash shuffle; near-dup losers come from
-    the LSH-banded pair generation — never all-pairs.
+    Scale: one hash shuffle on ``md5(text)`` picks each distinct text's
+    representative (its lowest doc_id, carried with its text), and only
+    representatives are shingled, banded and verified: exact copies never
+    reach the near-dup path.  Representative-level losers equal doc-level
+    losers: B's representative loses iff some text A with J(A, B) >=
+    threshold has min(A) < min(B) (signatures depend only on the shingle
+    set, so the pair is a candidate at either level).
     """
-    exact_keep = (
-        docs.select(F.md5(F.col("text")).alias("h"), "doc_id")
-        .groupBy("h").agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
+    reps = docs.groupBy(F.md5(F.col("text")).alias("_h")).agg(
+        F.min("doc_id").alias("doc_id"),
+        F.min_by("text", "doc_id").alias("text"))
     losers = (
-        minhash_lsh_dedup_pairs(docs, threshold=threshold, n=n)
-        .select(F.col("y").alias("doc_id")).distinct()
+        minhash_lsh_dedup_pairs(reps, threshold=threshold, n=n)
+        .select(F.col("y").alias("doc_id"))
     )
     return (
-        docs.select("doc_id")
-        .join(exact_keep, "doc_id", "left_semi")
+        reps.select("doc_id")
         .join(losers, "doc_id", "left_anti")
         .orderBy("doc_id")
     )
@@ -1536,7 +1542,9 @@ def dedup_against(base: DataFrame, new: DataFrame, threshold: float = 0.7,
     crosses the join); candidates come from an asymmetric equality join
     of new band keys against base band keys — the candidate count is
     bounded by band collisions, never |new| x |base|.  Verification
-    joins shingles for candidate pairs only.  ``max_bucket_size`` caps a
+    scores candidate pairs only, on the two docs' shingle arrays
+    (``jaccard_verify``); nothing is cached, so the operator leaves no
+    persisted table behind.  ``max_bucket_size`` caps a
     hot band bucket on the BASE side (a template bucket with k base
     members emits k rows per colliding new doc): over the cap, the
     bucket is dropped from candidates — at that size the batch operators
@@ -1551,11 +1559,9 @@ def dedup_against(base: DataFrame, new: DataFrame, threshold: float = 0.7,
         .select("doc_id")
         .withColumn("exact_dup", F.lit(True))
     )
-    sh_new = exploded_shingles(new, n).cache()
-    sh_base = exploded_shingles(base, n).cache()
-    bn = band_keys(sigs_from_shingles(sh_new)) \
+    bn = band_keys(sigs_from_shingles(exploded_shingles(new, n))) \
         .withColumnRenamed("doc_id", "new_id")
-    bb = band_keys(sigs_from_shingles(sh_base)) \
+    bb = band_keys(sigs_from_shingles(exploded_shingles(base, n))) \
         .withColumnRenamed("doc_id", "base_id")
     if max_bucket_size is not None:
         hot = bb.groupBy("band", "bkey") \
@@ -1565,23 +1571,9 @@ def dedup_against(base: DataFrame, new: DataFrame, threshold: float = 0.7,
         bb = bb.join(hot, ["band", "bkey"], "left_anti")
     cands = bn.join(bb, ["band", "bkey"]).select("new_id", "base_id") \
         .distinct()
-    sz_new = sh_new.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_new"))
-    sz_base = sh_base.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_base"))
-    sa, sb = sh_new.alias("sa"), sh_base.alias("sb")
-    inter = (
-        cands.join(sa, F.col("new_id") == F.col("sa.doc_id"))
-        .join(sb, (F.col("base_id") == F.col("sb.doc_id"))
-              & (F.col("sa.sh") == F.col("sb.sh")))
-        .groupBy("new_id", "base_id")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     near = (
-        inter.join(sz_new, F.col("new_id") == F.col("doc_id")).drop("doc_id")
-        .join(sz_base, F.col("base_id") == F.col("doc_id")).drop("doc_id")
-        .filter(
-            F.col("n_inter").cast("double")
-            / (F.col("n_new") + F.col("n_base") - F.col("n_inter"))
-            .cast("double") >= threshold)
+        jaccard_verify(cands, shingle_sets(new, n), shingle_sets(base, n),
+                       threshold, x="new_id", y="base_id")
         .select(F.col("new_id").alias("doc_id")).distinct()
         .withColumn("near_dup", F.lit(True))
     )

@@ -13,11 +13,16 @@ from __future__ import annotations
 import argparse
 import decimal
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too, from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

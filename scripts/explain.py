@@ -13,10 +13,11 @@ Usage: python scripts/explain.py [--sf DIR] [query ...]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Doc builds must be ONE partial-aggregable exchange: `partial_max` (or
 # partial min/count) before the hash exchange proves map-side combine; a
@@ -418,9 +419,10 @@ CHECKS = {
     ),
     # cross-snapshot dedup: candidates must come from band-key equality
     # joins (hashpartitioning on band keys), never a nested-loop cross of
-    # new x base; no window, no Python
+    # new x base, and are verified on shingle arrays; no window, no
+    # Python
     "dedup_against": (
-        [r"partial_min", r"partial_count"],
+        [r"partial_min", r"array_intersect"],
         [r"CartesianProduct", r"BroadcastNestedLoopJoin", r"Window",
          *NO_PYTHON],
     ),
@@ -592,10 +594,11 @@ CHECKS = {
         [r"Join", r"Window", r"CartesianProduct", *NO_PYTHON],
     ),
     # lineage: composed stage funnel — every inter-stage join keyed and
-    # broadcast where one side is stage-count-sized; survivor sets are
-    # combinable min/count partials (the one SMJ is doc-keyed left outer)
+    # broadcast where one side is stage-count-sized; signatures are
+    # combinable min partials and near-dup pairs are verified on shingle
+    # arrays (the one SMJ is doc-keyed left outer)
     "curation_lineage": (
-        [r"BroadcastHashJoin", r"partial_min", r"partial_count"],
+        [r"BroadcastHashJoin", r"partial_min", r"array_intersect"],
         [r"CartesianProduct", r"BroadcastNestedLoopJoin", *NO_PYTHON],
     ),
     # keeper-by-quality: canonical member is ONE combinable max_by per

@@ -8,10 +8,17 @@ import math
 import struct
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as hs
 from pyspark.sql import functions as F
 
+from hbase_indexer_spark.config.indexer_conf import FieldDef, IndexerConf
 from hbase_indexer_spark.functions import bytes_codec as bc
 from hbase_indexer_spark.functions import sqltext as st
+from hbase_indexer_spark.operators.extraction import (
+    _cell_matches_sql,
+    cell_matches,
+)
 
 TYPES = ("int", "long", "short", "double", "float", "boolean", "string",
          "bytes")
@@ -75,3 +82,53 @@ def test_decode_sql_unknown_types_fall_back():
 def test_qlit_escapes_quotes():
     assert st.qlit("a'b") == "'a''b'"
     assert st.qlit("plain") == "'plain'"
+
+
+def test_qlit_escapes_backslashes_before_quotes():
+    assert st.qlit("fam\\q1") == "'fam\\\\q1'"
+    assert st.qlit("x\\'y") == "'x\\\\''y'"
+
+
+# names built from the characters a SQL literal must survive: quotes,
+# backslashes (alone and before quotes or escape letters), unicode and the
+# \x1f unit separator
+NAME = hs.text(alphabet=hs.sampled_from(
+    ["'", "\\", '"', "\x1f", "n", "t", "u", "0", "a", ":", "*", " ", "%",
+     "_", "\u00e9", "\u6f22", "\U0001f600"]), min_size=0, max_size=8)
+PROPS = settings(max_examples=20, deadline=None,
+                 suppress_health_check=[HealthCheck.function_scoped_fixture])
+
+
+@PROPS
+@given(hs.lists(NAME, min_size=1, max_size=10))
+def test_qlit_evaluates_to_its_lit_twin(spark, names):
+    row = spark.range(1).select(
+        *[F.expr(st.qlit(s)).alias(f"e{i}") for i, s in enumerate(names)],
+        *[F.lit(s).alias(f"l{i}") for i, s in enumerate(names)]).first()
+    for i, s in enumerate(names):
+        assert row[f"e{i}"] == row[f"l{i}"] == s, repr(s)
+
+
+@PROPS
+@given(hs.lists(hs.tuples(NAME.filter(bool), NAME, hs.booleans()),
+                min_size=1, max_size=4),
+       hs.lists(hs.tuples(NAME, NAME), max_size=6))
+def test_cell_matches_sql_equals_column_predicate(spark, targets, extra):
+    conf = IndexerConf(table="t", fields=tuple(
+        FieldDef(f"f{i}", fam, qual, wild)
+        for i, (fam, qual, wild) in enumerate(targets)))
+    # each target's own cell, near misses (backslashes dropped, a suffix,
+    # a truncated qualifier) and unrelated cells
+    cells = list(extra)
+    for fam, qual, _ in targets:
+        cells += [(fam, qual), (fam, qual + "x"), (fam, qual[:-1]),
+                  (fam.replace("\\", ""), qual.replace("\\", ""))]
+    df = spark.createDataFrame(cells, "family string, qualifier string")
+    got = df.select(
+        F.expr(_cell_matches_sql(conf)).alias("s"),
+        cell_matches(conf, F.col("family"), F.col("qualifier")).alias("c"),
+    ).collect()
+    for (fam, qual), r in zip(cells, got):
+        assert r["s"] == r["c"], (fam, qual)
+    # every target matches its own cell (the comparison is not vacuous)
+    assert all(got[len(extra) + 4 * i]["s"] for i in range(len(targets)))
