@@ -3220,7 +3220,7 @@ def _pinned(fn: Callable[[SparkSession, str], DataFrame]):
 
 
 # The full oracled-query registry. Insertion order here is historical
-# grouping only — the driver-gate ordering is _GATE_WINDOW_R9 below.
+# grouping only — the queries() gate ordering is _GATE_WINDOW_R10 below.
 _ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # --- driver-green r7 (CORRECTNESS_r07, 50/50) ---
         # analytics, last 8 of 15
@@ -3465,72 +3465,6 @@ _ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # ORDER MATTERS: the driver's correctness gate checks the FIRST 50
 # queries() entries, so this list IS the audit policy (round-3 ADVICE).
 #
-# r9 rotation: the r8 window recorded 50/50 green (CORRECTNESS_r08),
-# completing the ledger — every pre-r9 entry has been driver-checked at
-# least once.  This window holds (a) operators built this round, then
-# (b) EVERY remaining entry whose latest driver check predates r5 (the
-# r2 analytics tail + r3/r4 pipeline rows — 24 entries, closing the
-# VERDICT r8 #7 freshness floor), and (c) the oldest 25 of the
-# r5-checked rows; the r10 window continues with the rest of r5 + r6.
-_GATE_WINDOW_R9: list[str] = [
-    # (a) r9-built operators gate immediately
-    "quarantine_merge",
-    "l_diversity_audit",
-    "t_closeness_audit",
-    "rendezvous_reshard",
-    "prefix_filter_xjoin",
-    # (b) re-checks: oldest driver evidence first — the r2 analytics
-    # tail and the r3/r4 pipeline rows (completing the "no entry whose
-    # latest driver check predates r5" policy, VERDICT r8 #7)
-    "disjunctive_promo_revenue",
-    "event_value_bands",
-    "event_value_percentiles",
-    "excess_inventory_suppliers",
-    "important_part_value",
-    "market_share",
-    "min_cost_supplier",
-    "nation_trade_volume",
-    "order_priority_cube",
-    "order_status_pivot",
-    "product_type_profit",
-    "returned_item_losses",
-    "small_quantity_revenue",
-    "waiting_suppliers",
-    "minhash_signatures",
-    "ngram_jaccard_dedup",
-    "repetition_filter",
-    "text_profile",
-    "token_stats",
-    "dedup_against",
-    "media_frame_sample",
-    "nation_set_ops",
-    "sliding_event_rates",
-    "user_event_history",
-    # (c) re-checks: the oldest half of the r5-checked pipeline rows
-    "ann_int8_rerank",
-    "ann_ivf_int8",
-    "ann_recall_report",
-    "bigram_logprob",
-    "bloom_screen",
-    "bpe_merge_candidates",
-    "cdc_dedup",
-    "char_entropy",
-    "chunk_documents",
-    "corpus_summary",
-    "curation_lineage",
-    "curriculum_order",
-    "decontaminate",
-    "dedup_keep_best",
-    "dedup_pair_quality",
-    "dedup_store_screen",
-    "embedding_drift",
-    "epoch_expand",
-    "event_funnel",
-    "fixed_k_sample",
-    "gopher_rules",
-]
-
-
 # r10 rotation: the r9 window recorded 50/50 green (CORRECTNESS_r09) and
 # the ledger shows EVERY query driver-checked at least once.  This round
 # is an optimization round, so the window fronts (a) every query whose

@@ -225,15 +225,24 @@ class IndexerSupervisor:
 
     def _batch_build(self, d: IndexerDefinition) -> None:
         """§3.2 batch rebuild: scan a snapshot, rebuild, atomic publish
-        (IndexerMaster.startFullIndexBuild, :288-329)."""
+        (IndexerMaster.startFullIndexBuild, :288-329).  A build that
+        raises puts the definition back to INACTIVE before re-raising, so
+        it never stays BUILDING."""
         self.model.put(replace(d, batch_build_state=BUILDING))
-        conf = d.indexer_conf()
-        snapshot_path = d.conf.get("batch_snapshot_path")
-        if snapshot_path is None:
-            raise ValueError(f"indexer {d.name!r}: no batch_snapshot_path configured")
-        cells = self.spark.read.parquet(snapshot_path)
-        docs = build_index(cells, conf)
-        self.index_store(d.name).overwrite(docs, self.spark)
+        try:
+            conf = d.indexer_conf()
+            snapshot_path = d.conf.get("batch_snapshot_path")
+            if snapshot_path is None:
+                raise ValueError(
+                    f"indexer {d.name!r}: no batch_snapshot_path configured")
+            cells = self.spark.read.parquet(snapshot_path)
+            docs = build_index(cells, conf)
+            self.index_store(d.name).overwrite(docs, self.spark)
+        except BaseException:
+            latest = self.model.get(d.name)
+            if latest is not None:
+                self.model.put(replace(latest, batch_build_state=INACTIVE))
+            raise
         latest = self.model.get(d.name)
         assert latest is not None
         self.model.put(replace(latest, batch_build_state=BUILD_COMPLETED))

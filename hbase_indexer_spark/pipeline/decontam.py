@@ -170,22 +170,17 @@ def semantic_decontam(emb: DataFrame, threshold: float = 0.4,
     small and hot — the band join broadcasts it."""
     from hbase_indexer_spark.pipeline.curation import SPLIT_BUCKETS, _bucket
     from hbase_indexer_spark.pipeline.similarity import (
-        dot,
-        hyperplane_sketch,
+        cosine_at_least,
+        hyperplane_sketches,
         norm,
     )
 
     cut = int(test_frac * SPLIT_BUCKETS)
-    sketches = [
-        hyperplane_sketch(F.col("embedding"), dim, n_bits,
-                          plane_offset=n_bits * t).alias(f"b{t}")
-        for t in range(n_tables)
-    ]
     sk = emb.select(
         "vec_id", "embedding",
         norm(F.col("embedding")).alias("nrm"),
         (_bucket(F.col("vec_id"), salt) < cut).alias("is_test"),
-        *sketches,
+        *hyperplane_sketches(F.col("embedding"), dim, n_bits, n_tables),
     )
     tables = sk.select(
         "vec_id", "is_test",
@@ -206,8 +201,8 @@ def semantic_decontam(emb: DataFrame, threshold: float = 0.4,
         F.col("nrm").alias("nb"))
     return (
         cands.join(ex, "x").join(F.broadcast(ey), "y")
-        .filter((dot(F.col("va"), F.col("vb"))
-                 / (F.col("na") * F.col("nb"))) >= threshold)
+        .filter(cosine_at_least(F.col("va"), F.col("vb"), F.col("na"),
+                                F.col("nb"), threshold))
         .groupBy(F.col("x").alias("vec_id"))
         .agg(F.count_distinct(F.col("y")).alias("n_test_hits"))
     )

@@ -17,6 +17,8 @@ has a deterministic DuckDB oracle.
 
 from __future__ import annotations
 
+from typing import Callable, Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -136,6 +138,68 @@ def jaccard_verify(cands: DataFrame, x_sets: DataFrame, y_sets: DataFrame,
                        ).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+# ---------------------------------------------------------------------------
+# Distinct-value pair kernel
+# ---------------------------------------------------------------------------
+
+def distinct_value_pairs(rows: DataFrame, id_col: str, key: str,
+                         rep_pairs: Callable[[DataFrame, DataFrame], DataFrame],
+                         *, derive: Sequence[Column] = (),
+                         same_gate: Column | None = None,
+                         same_cols: Sequence[Column] = (),
+                         right: DataFrame | None = None) -> DataFrame:
+    """Candidate pairs over DISTINCT values of ``key``, expanded to ids.
+
+    When a pair's score depends only on the two key values, rows sharing
+    a value are interchangeable.  Each side groups into one row per value,
+    ``(gid = min id, ids = sorted ids, key, *derive)``, pinned once (every
+    branch below reads it).  ``rep_pairs(left_groups, right_groups)`` then
+    runs the quadratic candidate + verify step once per distinct value and
+    returns verified ``(gx, gy, *extras)`` group pairs; each expands to
+    the cross product of the two groups' ids.  A group of g equal rows
+    costs one row instead of O(g²) candidates in every bucket it meets.
+
+    Self join (``right`` is None; both arguments are the same table):
+    pairs come out as ``least/greatest`` of the ids, and groups with >= 2
+    ids that pass ``same_gate`` add their within-group pairs, scored by
+    ``same_cols`` (named like the extras).  Groups partition the ids, so
+    every pair appears once.  R-S join: ``x`` is a ``rows`` id, ``y`` a
+    ``right`` id, cross pairs only.  Returns ``(x, y, *extras)``."""
+    width = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+    def groups_of(df: DataFrame) -> DataFrame:
+        # the fixed-width key repartition IS the aggregate's shuffle, and
+        # AQE does not coalesce it: ``derive`` (sketch folds, the costly
+        # part) runs on every core instead of the one or two tasks a
+        # byte-small coalesced aggregate output would get
+        return (df.repartition(width, key)
+                .groupBy(key)
+                .agg(F.min(id_col).alias("gid"),
+                     F.sort_array(F.collect_list(id_col)).alias("ids"))
+                .select("gid", "ids", key, *derive)
+                .localCheckpoint(eager=False))
+
+    gl = groups_of(rows)
+    gr = gl if right is None else groups_of(right)
+    pairs = rep_pairs(gl, gr)
+    extras = [c for c in pairs.columns if c not in ("gx", "gy")]
+    both = (pairs
+            .join(gl.select(F.col("gid").alias("gx"), F.col("ids").alias("xs")), "gx")
+            .join(gr.select(F.col("gid").alias("gy"), F.col("ids").alias("ys")), "gy")
+            .select(F.explode("xs").alias("a"), "ys", *extras)
+            .select("a", F.explode("ys").alias("b"), *extras))
+    if right is not None:
+        return both.select(F.col("a").alias("x"), F.col("b").alias("y"), *extras)
+    cross = both.select(F.least("a", "b").alias("x"),
+                        F.greatest("a", "b").alias("y"), *extras)
+    # ids is sorted, so position order IS x < y
+    same = (gl.filter((F.size("ids") >= 2) & same_gate)
+            .select(F.posexplode("ids").alias("i", "x"), "ids", *same_cols)
+            .select("x", F.explode(F.expr("slice(ids, i + 2, size(ids))"))
+                    .alias("y"), *extras))
+    return cross.unionByName(same)
 
 
 # ---------------------------------------------------------------------------
@@ -730,94 +794,41 @@ def embedding_cosine_pairs_lsh(emb: DataFrame, threshold: float = 0.4,
     ``embedding_cosine_pairs_blocked`` are the declared exact baselines —
     O(n^2) flops — for verification and small corpora).  Deterministic
     end-to-end (LCG hyperplanes), so the whole approximate pipeline has an
-    exact SQL oracle: :func:`embedding_cosine_pairs_lsh_sql`."""
-    # r10: vectors with EQUAL values are interchangeable — the sketch and
-    # the cosine depend only on the value — so on a corpus with exact-dup
-    # embeddings, candidates generate and verify once per DISTINCT vector
-    # and verified rep pairs expand back to id pairs (the
-    # distinct-token-set recipe of prefix_filter_pairs).  A duplicate
-    # group of size g otherwise costs O(g^2) candidate rows in EVERY
-    # table it collides in: the sf1 probe (10 exact copies per vector)
-    # spent 225s verifying 27.7M candidate pairs of which only ~0.27M are
-    # distinct.  One cheap stats job picks the path (data-derived
-    # adaptivity, the small_batch_tuning precedent); both paths emit the
-    # IDENTICAL pair set — on dup-free input the id-level pipeline IS the
-    # distinct-vector pipeline, so it runs ungrouped at zero overhead.
-    stats = emb.agg(F.count(F.lit(1)).alias("n"),
-                    F.count_distinct("embedding").alias("nd")).collect()[0]
-    if stats["nd"] == stats["n"]:
-        return _lsh_pairs_ungrouped(emb, threshold, dim, n_bits, n_tables)
+    exact SQL oracle: :func:`embedding_cosine_pairs_lsh_sql`.
 
-    from hbase_indexer_spark.pipeline.similarity import dot, hyperplane_sketch, norm
+    Vectors with EQUAL values are interchangeable (the sketch and the
+    cosine depend only on the value), so the pipeline runs over DISTINCT
+    vectors via :func:`distinct_value_pairs`: a duplicate group of size
+    g otherwise costs O(g²) candidate rows in EVERY table it collides in
+    (the sf1 probe, 10 exact copies per vector, verified 27.7M candidates
+    of which ~0.27M are distinct).  One pass per distinct vector computes
+    all sketches and the norm.  Identical vectors collide in every table,
+    so a group pairs internally iff its self-cosine passes the gate.  A
+    NULL or all-zero embedding fails every cosine gate: it never pairs."""
+    from hbase_indexer_spark.pipeline.similarity import (
+        cosine_at_least,
+        hyperplane_sketches,
+        norm,
+    )
 
-    # count_distinct skips NULL embeddings, so nd < n whenever NULLs
-    # exist — those rows take this (general) path, where they group
-    # together, sketch to bucket 0, and fail every cosine gate exactly
-    # like the ungrouped path.  Spark groups array keys by value
-    # (NaN==NaN, -0.0==0.0 — value-equal vectors have identical sketches
-    # and cosines either way).
-    groups = emb.groupBy("embedding").agg(
-        F.min("vec_id").alias("rid"), F.count(F.lit(1)).alias("gn"))
-
-    sketches = [
-        # table t uses its own independent plane family
-        hyperplane_sketch(F.col("embedding"), dim, n_bits,
-                          plane_offset=n_bits * t).alias(f"b{t}")
-        for t in range(n_tables)
-    ]
-    # ONE pass computes all n_tables sketches AND the vector norm (reused
-    # by the verify step, so the per-candidate work is dot-only).
-    # Materialized ONCE (eager localCheckpoint, the graph-loop recipe):
-    # four consumers read it — the table explode, both verify sides, the
-    # self-cosine gate, and the member map — and each would otherwise
-    # recompute the distinct-vector aggregation and the interpreted
-    # sketch folds.  The checkpoint is the operator's own working set
-    # (one row per DISTINCT vector: embedding + n_tables longs + norm),
-    # released by the context cleaner with the returned frame's lineage.
-    sk = groups.select(F.col("rid").alias("vec_id"), "embedding", "gn",
-                       norm(F.col("embedding")).alias("nrm"),
-                       *sketches).localCheckpoint(eager=True)
-    rep_pairs = _lsh_verify(sk, dot, threshold, n_tables)
-    # expand verified rep pairs back to id pairs.  Cross-group: every
-    # member pair of a verified (repA, repB) shares repA x repB's exact
-    # sketches and cosine, so membership expansion is the identity on the
-    # emitted pair SET (ordered lo < hi; groups partition the id space,
-    # so each unordered pair appears exactly once).  Same-group: members
-    # share every sketch (identical vectors collide in ALL tables), so
-    # they are candidates by construction; the group's self-cosine —
-    # dot(v,v)/(nrm*nrm), the bit-identical verify expression — gates
-    # the expansion (a zero/NULL vector has NULL cosine and never pairs,
-    # exactly like the ungrouped path).
-    members = (emb.select("vec_id", "embedding")
-               .join(sk.select("embedding", F.col("vec_id").alias("rid")),
-                     "embedding")
-               .select("rid", "vec_id"))
-    mx = members.select(F.col("rid").alias("x"), F.col("vec_id").alias("xid"))
-    my = members.select(F.col("rid").alias("y"), F.col("vec_id").alias("yid"))
-    cross = (rep_pairs.join(mx, "x").join(my, "y")
-             .select(F.least("xid", "yid").alias("x"),
-                     F.greatest("xid", "yid").alias("y")))
-    self_ok = sk.filter(
-        (F.col("gn") >= 2)
-        & ((dot(F.col("embedding"), F.col("embedding"))
-            / (F.col("nrm") * F.col("nrm"))) >= threshold)
-    ).select(F.col("vec_id").alias("rid"))
-    m1 = members.join(self_ok, "rid")
-    same = (m1.alias("s1").join(m1.alias("s2"), "rid")
-            .filter(F.col("s1.vec_id") < F.col("s2.vec_id"))
-            .select(F.col("s1.vec_id").alias("x"),
-                    F.col("s2.vec_id").alias("y")))
-    return cross.unionByName(same).distinct()
+    v, nrm = F.col("embedding"), F.col("nrm")
+    return distinct_value_pairs(
+        emb, "vec_id", "embedding",
+        lambda g, _: _lsh_verify(g, threshold, n_tables),
+        derive=[norm(v).alias("nrm"),
+                *hyperplane_sketches(v, dim, n_bits, n_tables)],
+        same_gate=cosine_at_least(v, v, nrm, nrm, threshold))
 
 
-def _lsh_verify(sk: DataFrame, dot, threshold: float,
+def _lsh_verify(groups: DataFrame, threshold: float,
                 n_tables: int) -> DataFrame:
-    """Shared candidate-generation + exact-cosine verify over a sketched
-    frame ``sk(vec_id, embedding, nrm, b0..b{n_tables-1})`` — the
-    original (r5) pipeline body, factored so the grouped and ungrouped
-    paths of :func:`embedding_cosine_pairs_lsh` stay expression-identical."""
-    tables = sk.select(
-        "vec_id",
+    """Candidate generation + exact-cosine verify over one row per
+    distinct vector ``(gid, embedding, nrm, b0..b{n_tables-1})``:
+    verified ``(gx, gy)``, gx < gy."""
+    from hbase_indexer_spark.pipeline.similarity import cosine_at_least
+
+    tables = groups.select(
+        "gid",
         F.posexplode(F.array(*[F.col(f"b{t}") for t in range(n_tables)]))
         .alias("tbl", "bkt"),
     )
@@ -825,42 +836,23 @@ def _lsh_verify(sk: DataFrame, dot, threshold: float,
     b = tables.alias("b")
     cands = (
         a.join(b, (F.col("a.tbl") == F.col("b.tbl")) & (F.col("a.bkt") == F.col("b.bkt"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("x"), F.col("b.vec_id").alias("y"))
+               & (F.col("a.gid") < F.col("b.gid")))
+        .select(F.col("a.gid").alias("gx"), F.col("b.gid").alias("gy"))
     )
-    ea = sk.select(F.col("vec_id").alias("x"), F.col("embedding").alias("va"),
-                   F.col("nrm").alias("na"))
-    eb = sk.select(F.col("vec_id").alias("y"), F.col("embedding").alias("vb"),
-                   F.col("nrm").alias("nb"))
+    ea = groups.select(F.col("gid").alias("gx"), F.col("embedding").alias("va"),
+                       F.col("nrm").alias("na"))
+    eb = groups.select(F.col("gid").alias("gy"), F.col("embedding").alias("vb"),
+                       F.col("nrm").alias("nb"))
     return (
-        cands.join(ea, "x").join(eb, "y")
-        # same float expression as cosine(): dot / (norm * norm) >= t —
-        # norms just come precomputed from the sketch pass.  The dedup of
-        # multi-table collisions runs AFTER the filter: re-verifying the
-        # duplicate candidates is cheaper than shuffling the full
-        # candidate set for a pre-verify distinct
-        .filter((dot(F.col("va"), F.col("vb"))
-                 / (F.col("na") * F.col("nb"))) >= threshold)
-        .select("x", "y")
+        cands.join(ea, "gx").join(eb, "gy")
+        # the dedup of multi-table collisions runs AFTER the filter:
+        # re-verifying the duplicate candidates is cheaper than shuffling
+        # the full candidate set for a pre-verify distinct
+        .filter(cosine_at_least(F.col("va"), F.col("vb"), F.col("na"),
+                                F.col("nb"), threshold))
+        .select("gx", "gy")
         .distinct()
     )
-
-
-def _lsh_pairs_ungrouped(emb: DataFrame, threshold: float, dim: int,
-                         n_bits: int, n_tables: int) -> DataFrame:
-    """The duplicate-free pipeline of :func:`embedding_cosine_pairs_lsh`
-    (the pre-r10 shape, zero added jobs): every vector is its own group,
-    so the id-level sketch pass IS the distinct-vector sketch pass."""
-    from hbase_indexer_spark.pipeline.similarity import dot, hyperplane_sketch, norm
-
-    sketches = [
-        hyperplane_sketch(F.col("embedding"), dim, n_bits,
-                          plane_offset=n_bits * t).alias(f"b{t}")
-        for t in range(n_tables)
-    ]
-    sk = emb.select("vec_id", "embedding",
-                    norm(F.col("embedding")).alias("nrm"), *sketches)
-    return _lsh_verify(sk, dot, threshold, n_tables)
 
 
 def embedding_cosine_pairs_lsh_sql(threshold: float = 0.4, dim: int = 64,
@@ -2943,46 +2935,24 @@ def prefix_filter_pairs(docs: DataFrame,
     equal-set clusters, so candidate volume drops by the mean cluster
     size squared (sf1 probe: 12.5k docs / 1.07k sets — 39.1M doc-level
     candidates became 0.6M set-level ones) while the produced pair set
-    is provably identical."""
+    is provably identical (:func:`distinct_value_pairs`)."""
     t = int(threshold_micro)
+    return distinct_value_pairs(
+        _token_sets(docs), "doc_id", "toks",
+        lambda g, _: _prefix_filter_set_pairs(g, g, t, self_join=True),
+        # same-set pairs score exactly 1e6: they qualify iff t <= 1e6
+        same_gate=F.lit(t <= 1_000_000),
+        same_cols=[F.lit(1_000_000).cast("long").alias("jaccard_micro")])
+
+
+def _token_sets(docs: DataFrame) -> DataFrame:
+    """``(doc_id, toks)``: each doc's canonical (sorted) distinct token
+    set.  Token-less docs can never pair (no shared token), so they are
+    dropped here."""
     txt = F.coalesce(F.col("text"), F.lit(""))
-    # canonical (sorted) distinct token set per doc; token-less docs can
-    # never pair (no shared token) and are dropped here exactly as the
-    # pre-r10 explode dropped them
-    tk = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(tokens(txt))).alias("toks"))
-    grp = (tk.filter(F.size("toks") > 0)
-           .groupBy("toks")
-           .agg(F.min("doc_id").alias("gid"),
-                F.sort_array(F.collect_list("doc_id")).alias("ids")))
-    # the group table feeds four plan branches (candidates, both
-    # expansion sides, same-set pairs) — pin it once instead of
-    # recomputing the tokenize+group subtree per branch (it is
-    # distinct-set-sized, the same scale global_rank already pins)
-    grp = grp.localCheckpoint(eager=False)
-    gp = _prefix_filter_set_pairs(
-        grp.select("gid", "toks"), grp.select("gid", "toks"), t,
-        self_join=True)
-    mx_ = grp.select(F.col("gid").alias("gx"), F.col("ids").alias("xs"))
-    my_ = grp.select(F.col("gid").alias("gy"), F.col("ids").alias("ys"))
-    cross = (gp.join(mx_, "gx").join(my_, "gy")
-             .select(F.explode("xs").alias("a"), "ys", "jaccard_micro")
-             .select("a", F.explode("ys").alias("b"), "jaccard_micro")
-             .select(F.least("a", "b").alias("x"),
-                     F.greatest("a", "b").alias("y"), "jaccard_micro"))
-    # same-set pairs: Jaccard is exactly 1e6; they qualify iff t <= 1e6
-    # (ids is sorted, so position order IS x < y)
-    within = (grp.filter(F.size("ids") >= 2)
-              .select(F.posexplode("ids").alias("i", "x"), "ids")
-              .select("x",
-                      F.explode(F.expr("slice(ids, i + 2, size(ids))"))
-                      .alias("y"))
-              .withColumn("jaccard_micro",
-                          F.lit(1_000_000).cast("long")))
-    if t > 1_000_000:
-        return cross
-    return cross.unionByName(within)
+    return (docs.select(
+        "doc_id", F.array_sort(F.array_distinct(tokens(txt))).alias("toks"))
+        .filter(F.size("toks") > 0))
 
 
 def _prefix_filter_set_pairs(left_sets: DataFrame, right_sets: DataFrame,
@@ -3096,30 +3066,10 @@ def prefix_filter_join(left: DataFrame, right: DataFrame,
     ``(left doc, right doc)`` pairs; the extra union for the df count
     is one combinable aggregate."""
     t = int(threshold_micro)
-    txt_ = F.coalesce(F.col("text"), F.lit(""))
-
-    def grp_of(df):
-        tk = df.select(
-            "doc_id",
-            F.array_sort(F.array_distinct(tokens(txt_))).alias("toks"))
-        return (tk.filter(F.size("toks") > 0)
-                .groupBy("toks")
-                .agg(F.min("doc_id").alias("gid"),
-                     F.collect_list("doc_id").alias("ids")))
-
-    # each side's group table feeds two plan branches (set pairs +
-    # expansion) — pin them once, as in :func:`prefix_filter_pairs`
-    gl = grp_of(left).localCheckpoint(eager=False)
-    gr = grp_of(right).localCheckpoint(eager=False)
-    gp = _prefix_filter_set_pairs(
-        gl.select("gid", "toks"), gr.select("gid", "toks"), t,
-        self_join=False)
-    mx_ = gl.select(F.col("gid").alias("gx"), F.col("ids").alias("xs"))
-    my_ = gr.select(F.col("gid").alias("gy"), F.col("ids").alias("ys"))
-    return (gp.join(mx_, "gx").join(my_, "gy")
-            .select(F.explode("xs").alias("x"), "ys", "jaccard_micro")
-            .select("x", F.explode("ys").alias("y"), "jaccard_micro")
-            .select("x", "y", "jaccard_micro"))
+    return distinct_value_pairs(
+        _token_sets(left), "doc_id", "toks",
+        lambda gl, gr: _prefix_filter_set_pairs(gl, gr, t, self_join=False),
+        right=_token_sets(right))
 
 
 def prefix_filter_join_sql(threshold_micro: int,

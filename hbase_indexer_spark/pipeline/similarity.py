@@ -46,6 +46,16 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def cosine_at_least(va: Column, vb: Column, na: Column, nb: Column,
+                    threshold: float) -> Column:
+    """The exact-cosine gate of the LSH pair paths, on precomputed norms:
+    ``dot(va, vb) / (na * nb) >= threshold``.  ``try_divide`` turns a zero
+    norm product into NULL, so a zero vector never passes (plain division
+    raises DIVIDE_BY_ZERO under ANSI); every non-zero quotient is the same
+    double as plain division."""
+    return F.try_divide(dot(va, vb), na * nb) >= threshold
+
+
 def brute_force_topk(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
     """Exact top-k neighbors for each query id: broadcast queries, one pass
     over the corpus, per-query top-k window (ties broken by neighbor id)."""
@@ -129,6 +139,16 @@ def hyperplane_sketch(v: Column, dim: int, n_bits: int = 12,
         ).otherwise(F.lit(0).cast("long")),
     )
     return F.aggregate(bits, F.lit(0).cast("long"), lambda a, t: a + t)
+
+
+def hyperplane_sketches(v: Column, dim: int, n_bits: int,
+                        n_tables: int) -> list[Column]:
+    """The OR-amplified sketch columns ``b0..b{n_tables-1}`` of ``v``:
+    table t uses its own plane family (offset ``n_bits * t``)."""
+    return [
+        hyperplane_sketch(v, dim, n_bits, plane_offset=n_bits * t).alias(f"b{t}")
+        for t in range(n_tables)
+    ]
 
 
 def _probe_masks(n_bits: int, probe_bits: int) -> list[int]:

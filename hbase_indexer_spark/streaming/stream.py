@@ -106,10 +106,14 @@ class IndexerStreamJob:
 
     def run_available(self, events: DataFrame) -> None:
         """Drain everything currently available, then stop (the batch-replay
-        form of the continuous query; deterministic for tests)."""
+        form of the continuous query; deterministic for tests).  A failed
+        drain clears ``query`` too, so the next call retries and raises
+        again instead of treating the dead query as running."""
         q = self.start(events, available_now=True)
-        q.awaitTermination()
-        self.query = None
+        try:
+            q.awaitTermination()
+        finally:
+            self.query = None
 
     def stop(self) -> None:
         """Pause (T4): offsets stay in the checkpoint; restart resumes."""

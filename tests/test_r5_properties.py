@@ -16,7 +16,7 @@ small inputs vs pure-Python reference models.
 import hashlib
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from hbase_indexer_spark.pipeline.dedup import embedding_cosine_pairs_lsh
@@ -27,15 +27,18 @@ DIM = 8  # small dim keeps the hypothesis loop fast; planes slice to dim
 vec_st = st.lists(
     st.integers(min_value=-3, max_value=3).map(float),
     min_size=DIM, max_size=DIM,
-).filter(lambda v: any(x != 0.0 for x in v))
+)
 emb_st = st.lists(vec_st, min_size=2, max_size=8)
+# zero vectors (drawn rarely at random) always get one explicit example
+ZERO_VECS = [[0.0] * DIM, [0.0] * DIM, [1.0] * DIM, [2.0] * DIM]
 
 
 def _cos(a, b):
+    """Cosine of a and b; -inf (no pair at any threshold) for a zero norm."""
     d = sum(x * y for x, y in zip(a, b))
     na = math.sqrt(sum(x * x for x in a))
     nb = math.sqrt(sum(x * x for x in b))
-    return d / (na * nb)
+    return d / (na * nb) if na * nb > 0 else -math.inf
 
 
 def _emb_df(spark, vecs):
@@ -47,6 +50,7 @@ def _emb_df(spark, vecs):
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(vecs=emb_st, threshold=st.sampled_from([0.3, 0.7]))
+@example(vecs=ZERO_VECS, threshold=0.3)
 def test_embedding_lsh_pairs_are_exactly_verified(spark, vecs, threshold):
     got = {(r["x"], r["y"]) for r in embedding_cosine_pairs_lsh(
         _emb_df(spark, vecs), threshold=threshold, dim=DIM,
@@ -61,6 +65,7 @@ def test_embedding_lsh_pairs_are_exactly_verified(spark, vecs, threshold):
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(vecs=emb_st, threshold=st.sampled_from([0.5]))
+@example(vecs=ZERO_VECS, threshold=0.5)
 def test_semantic_decontam_hits_are_truthful(spark, vecs, threshold):
     from hbase_indexer_spark.pipeline.curation import SPLIT_BUCKETS
 

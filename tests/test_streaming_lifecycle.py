@@ -13,6 +13,7 @@ from hbase_indexer_spark.lifecycle import (
     BUILD_REQUESTED,
     DELETE_REQUESTED,
     DO_NOT_SUBSCRIBE,
+    INACTIVE,
     SUBSCRIBE_AND_CONSUME,
     SUBSCRIBE_DO_NOT_CONSUME,
     ConcurrentModificationError,
@@ -205,6 +206,45 @@ def test_supervisor_batch_build(spark, supervised, tmp_path):
     assert model.get("ix1").batch_build_state == BUILD_COMPLETED
     got = {r["id"]: r["name_s"] for r in sup.read_index("ix1").collect()}
     assert got == {"r1": "alice", "r2": "bob"}
+
+
+def test_supervisor_failed_batch_build_resets_state(spark, supervised, tmp_path):
+    """A batch build that raises (here: a snapshot that is not parquet)
+    must leave the definition INACTIVE, not stuck in BUILDING."""
+    src, model, sup = supervised
+    snap = tmp_path / "snapshot"
+    snap.mkdir()
+    (snap / "part-0.parquet").write_bytes(b"not a parquet file")
+    model.put(IndexerDefinition(
+        name="ix1", conf={**CONF, "batch_snapshot_path": str(snap)},
+        incremental_state=DO_NOT_SUBSCRIBE, batch_build_state=BUILD_REQUESTED,
+    ))
+    with pytest.raises(Exception):
+        sup.sync()
+    assert model.get("ix1").batch_build_state == INACTIVE
+    assert sup.read_index("ix1") is None
+
+
+def test_supervisor_failed_stream_batch_raises_on_every_sync(
+        spark, supervised, monkeypatch):
+    """A foreachBatch that raises must not leave the job looking like a
+    running query: every later sync retries the drain and raises again,
+    and the indexer catches up once the batch succeeds."""
+    src, model, sup = supervised
+    model.put(IndexerDefinition(name="ix1", conf=CONF))
+    write_chunk(spark, src, [ev(1, "r1", "name", "alice")], "c0")
+
+    def fail(self, df, batch_id):
+        raise RuntimeError("injected batch failure")
+
+    monkeypatch.setattr(IncrementalIndexer, "process_batch", fail)
+    for _ in range(2):
+        with pytest.raises(Exception, match="injected batch failure"):
+            sup.sync()
+        assert sup.jobs["ix1"].query is None
+    monkeypatch.undo()
+    sup.sync()
+    assert {r["id"] for r in sup.read_index("ix1").collect()} == {"r1"}
 
 
 def test_supervisor_delete(spark, supervised):
